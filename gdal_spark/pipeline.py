@@ -40,7 +40,6 @@ def main() -> None:
 
     spark = get_spark("gdal-spark-pipeline")
     spark.sparkContext.setLogLevel("WARN")
-    store = CheckpointStore(args.store)
 
     if args.synthetic:
         pages = synthetic_pages(spark, args.synthetic).select(
@@ -50,7 +49,14 @@ def main() -> None:
     else:
         pages = pages_from_documents(spark, args.sf_dir)
         snapshot = f"sf:{args.sf_dir}"
+    run(spark, CheckpointStore(args.store), pages, snapshot,
+        zoom=args.zoom, min_zoom=args.min_zoom, n_parts=args.n_parts)
 
+
+def run(spark, store: CheckpointStore, pages, snapshot: str,
+        zoom: int = 8, min_zoom: int = 5, n_parts: int = 16) -> None:
+    """The checkpointed flow over `pages` (url, warc_ts, html, text, lang),
+    printing each stage's lineage report as one JSON line."""
     geo = extract_geo(pages)
     zones = zones_df(spark)
 
@@ -58,9 +64,9 @@ def main() -> None:
     indexed = store.run_stage(
         spark, "index", geo,
         lambda df: with_cells(df).drop("html"),
-        lineage_key="url", n_parts=args.n_parts, input_snapshot=snapshot,
+        lineage_key="url", n_parts=n_parts, input_snapshot=snapshot,
     )
-    print(json.dumps(store.lineage_report(spark, "index")))
+    print(json.dumps(store.lineage_report("index")))
 
     # stage 2: PIP join
     store.run_stage(
@@ -68,29 +74,29 @@ def main() -> None:
         lambda df: pip_join_broadcast(df, zones).select(
             "part_id", "url", "zone_id", "name"
         ),
-        lineage_key="url", n_parts=args.n_parts, input_snapshot=snapshot,
+        lineage_key="url", n_parts=n_parts, input_snapshot=snapshot,
     )
-    print(json.dumps(store.lineage_report(spark, "pip")))
+    print(json.dumps(store.lineage_report("pip")))
 
     # stage 3: partial pixel counts — lineage stays the input url
     # partition (partial aggregates are additive, the valid lineage unit
     # for an agg stage)
     def partial_pixels(df):
-        d = TI.with_pixels(df.filter(F.col("lat").isNotNull()), args.zoom)
+        d = TI.with_pixels(df.filter(F.col("lat").isNotNull()), zoom)
         return d.groupBy("part_id", "zoom", "tx", "ty", "px", "py").agg(
             F.count(F.lit(1)).alias("burn")
         )
 
     pixels = store.run_stage(
         spark, "pixels", indexed, partial_pixels,
-        lineage_key="url", n_parts=args.n_parts, input_snapshot=snapshot,
+        lineage_key="url", n_parts=n_parts, input_snapshot=snapshot,
     )
-    print(json.dumps(store.lineage_report(spark, "pixels")))
+    print(json.dumps(store.lineage_report("pixels")))
 
     # stage 4: pyramid — lineage = the min-zoom ancestor tile, so every
     # partition owns all descendants of its z_min tiles and the pyramid
     # is computable per partition with no cross-partition children
-    shift = args.zoom - args.min_zoom
+    shift = zoom - min_zoom
     merged = (
         pixels.groupBy("zoom", "tx", "ty", "px", "py")
         .agg(F.sum("burn").alias("burn"))
@@ -107,12 +113,12 @@ def main() -> None:
     def pyramid_stage(df):
         out = TI.pyramid_counts_fast(
             df.select("zoom", "tx", "ty", "px", "py", "burn"),
-            args.min_zoom, args.zoom,
+            min_zoom, zoom,
         )
         anc = F.concat_ws(
             ":",
-            (F.col("tx") / F.pow(F.lit(2), F.col("zoom") - args.min_zoom)).cast("long"),
-            (F.col("ty") / F.pow(F.lit(2), F.col("zoom") - args.min_zoom)).cast("long"),
+            (F.col("tx") / F.pow(F.lit(2), F.col("zoom") - min_zoom)).cast("long"),
+            (F.col("ty") / F.pow(F.lit(2), F.col("zoom") - min_zoom)).cast("long"),
         )
         return out.withColumn("anc_key", anc).join(
             df.select("anc_key", "part_id").distinct(), "anc_key"
@@ -120,9 +126,9 @@ def main() -> None:
 
     store.run_stage(
         spark, "pyramid", merged, pyramid_stage,
-        lineage_key="anc_key", n_parts=args.n_parts, input_snapshot=snapshot,
+        lineage_key="anc_key", n_parts=n_parts, input_snapshot=snapshot,
     )
-    print(json.dumps(store.lineage_report(spark, "pyramid")))
+    print(json.dumps(store.lineage_report("pyramid")))
 
 
 if __name__ == "__main__":

@@ -14,15 +14,28 @@ snapshot += files):
     <root>/<stage>/batch=<n>/part_id=<p>/*.parquet     data
     <root>/<stage>/_metrics/batch-<n>.parquet          lineage commit marker
 
-A batch's data becomes visible ONLY when its metrics file exists (written
-after the data write succeeds); a kill mid-batch leaves an orphan data dir
-that is ignored and overwritten on resume. Metrics rows carry
-(stage, part_id, row_count, bytes, batch, input_snapshot, wall_ms) — the
-per-partition lineage record. On a real cluster the same class maps to
-`df.writeTo(table).append()` per batch + a lineage table, and the
-partition column should be the stage's natural shuffle key (cell bucket,
-tile id) so checkpointing adds no extra shuffle: `part_id` is pmod(hash)
-of the lineage key, aligned with the join/agg partitioning.
+A commit is the Spark write of the batch's data, then the metrics file,
+written to a temporary name and renamed into place: the rename is the
+visibility point. A kill mid-batch leaves an orphan data dir that is
+ignored and overwritten on resume. The metrics file holds one row per
+lineage partition of the batch, (stage, part_id, row_count, bytes, batch,
+input_snapshot, wall_ms), and records the schema `load()` reads the stage
+with as key-value metadata (`SCHEMA_KEY`). Row counts come from the
+footers of the parquet files the write just produced, bytes from their
+sizes, and the schema from the transform's output schema in the form
+Spark's own inference gives it back (the data columns, then the
+partition columns `batch` and `part_id` as int).
+
+All bookkeeping is driver-side file I/O and starts no Spark job: resume
+filters `part_id` against the committed metrics files, the commit reads
+footers, and `load()` passes the recorded schema instead of inferring it.
+Stores written before the schema was recorded fall back to inference.
+
+On a real cluster the same class maps to `df.writeTo(table).append()` per
+batch + a lineage table, and the partition column should be the stage's
+natural shuffle key (cell bucket, tile id) so checkpointing adds no extra
+shuffle: `part_id` is pmod(hash) of the lineage key, aligned with the
+join/agg partitioning.
 """
 
 from __future__ import annotations
@@ -33,8 +46,32 @@ import os
 import time
 from typing import Callable
 
+import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
+
+# metrics-file metadata key holding the stage's Spark schema (JSON)
+SCHEMA_KEY = b"gdal_spark.schema"
+
+_METRICS_DTYPES = {
+    "stage": object, "part_id": "int32", "row_count": "int64", "bytes": "int64",
+    "batch": "int32", "input_snapshot": object, "wall_ms": "int64",
+}
+
+
+def _read_schema(out: StructType) -> StructType:
+    """The schema of `out` read back from batch=<n>/part_id=<p>/ dirs with
+    a given schema: the data columns, then the partition columns as int (a
+    data column named like one is replaced by it). A file source read makes
+    every field nullable itself."""
+    parts = ("batch", "part_id")
+    return StructType(
+        [f for f in out.fields if f.name not in parts]
+        + [StructField(c, IntegerType(), True) for c in parts]
+    )
 
 
 class CheckpointStore:
@@ -47,17 +84,25 @@ class CheckpointStore:
     def _metrics_dir(self, stage: str) -> str:
         return os.path.join(self.root, stage, "_metrics")
 
-    def metrics(self, spark: SparkSession, stage: str) -> DataFrame | None:
-        files = sorted(glob.glob(os.path.join(self._metrics_dir(stage), "batch-*.parquet")))
-        if not files:
-            return None
-        return spark.read.parquet(*files)
+    def _metrics_file(self, stage: str, batch: int) -> str:
+        return os.path.join(self._metrics_dir(stage), f"batch-{batch}.parquet")
 
-    def completed_parts(self, spark: SparkSession, stage: str) -> set[int]:
-        m = self.metrics(spark, stage)
-        if m is None:
-            return set()
-        return {r["part_id"] for r in m.select("part_id").distinct().collect()}
+    def _metrics_files(self, stage: str) -> list[str]:
+        return [self._metrics_file(stage, b) for b in self.committed_batches(stage)]
+
+    def metrics(self, stage: str) -> pd.DataFrame:
+        """All committed metrics rows of `stage`, read on the driver."""
+        files = self._metrics_files(stage)
+        if not files:
+            return pd.DataFrame({c: pd.Series(dtype=t) for c, t in _METRICS_DTYPES.items()})
+        return pd.concat([pd.read_parquet(f) for f in files], ignore_index=True)
+
+    def completed_parts(self, stage: str) -> set[int]:
+        return {
+            p
+            for f in self._metrics_files(stage)
+            for p in pq.read_table(f, columns=["part_id"])["part_id"].to_pylist()
+        }
 
     def committed_batches(self, stage: str) -> list[int]:
         return sorted(
@@ -88,7 +133,7 @@ class CheckpointStore:
         metrics write (the visibility point). `fail_after_batches` injects
         a kill for tests. Returns the stage's committed output DataFrame.
         """
-        done = self.completed_parts(spark, stage)
+        done = self.completed_parts(stage)
         missing = [p for p in range(n_parts) if p not in done]
         part_col = F.pmod(F.xxhash64(F.col(lineage_key)), F.lit(n_parts))
         next_batch = max(self.committed_batches(stage), default=-1) + 1
@@ -96,8 +141,6 @@ class CheckpointStore:
             missing[i :: n_batches] for i in range(min(n_batches, len(missing)))
         ]
         for bi, parts in enumerate(groups):
-            if not parts:
-                continue
             if fail_after_batches is not None and bi >= fail_after_batches:
                 raise RuntimeError(f"injected failure before batch {bi}")
             t0 = time.time()
@@ -111,34 +154,28 @@ class CheckpointStore:
             data_dir = os.path.join(self.root, stage, f"batch={batch_id}")
             out.write.mode("overwrite").partitionBy("part_id").parquet(data_dir)
             wall_ms = int((time.time() - t0) * 1000)
-            written = spark.read.parquet(data_dir)
-            rows = written.groupBy("part_id").count().collect()
-            sizes = {
-                p: sum(
-                    os.path.getsize(f)
-                    for f in glob.glob(os.path.join(data_dir, f"part_id={p}", "*.parquet"))
-                )
-                for p in parts
-            }
-            counts = {r["part_id"]: r["count"] for r in rows}
-            metrics_rows = [
-                (stage, int(p), int(counts.get(p, 0)), int(sizes.get(p, 0)),
-                 batch_id, input_snapshot, wall_ms)
-                for p in parts
-            ]
-            mdf = spark.createDataFrame(
-                metrics_rows,
-                "stage string, part_id int, row_count long, bytes long, "
-                "batch int, input_snapshot string, wall_ms long",
-            )
+            rows, sizes = [], []
+            for p in parts:
+                files = glob.glob(os.path.join(data_dir, f"part_id={p}", "*.parquet"))
+                rows.append(sum(pq.read_metadata(f).num_rows for f in files))
+                sizes.append(sum(os.path.getsize(f) for f in files))
+            mdf = pd.DataFrame({
+                "stage": stage, "part_id": parts, "row_count": rows, "bytes": sizes,
+                "batch": batch_id, "input_snapshot": input_snapshot, "wall_ms": wall_ms,
+            }).astype(_METRICS_DTYPES)
+            table = pa.Table.from_pandas(mdf)
+            table = table.replace_schema_metadata({
+                **table.schema.metadata, SCHEMA_KEY: _read_schema(out.schema).json(),
+            })
             os.makedirs(self._metrics_dir(stage), exist_ok=True)
             tmp = os.path.join(self._metrics_dir(stage), f".batch-{batch_id}.tmp")
-            mdf.toPandas().to_parquet(tmp)
-            os.replace(tmp, os.path.join(self._metrics_dir(stage), f"batch-{batch_id}.parquet"))
+            pq.write_table(table, tmp)
+            os.replace(tmp, self._metrics_file(stage, batch_id))
         return self.load(spark, stage)
 
     def load(self, spark: SparkSession, stage: str) -> DataFrame:
-        """Committed output only: union of batch dirs that have metrics."""
+        """Committed output only: union of batch dirs that have metrics,
+        read with the schema recorded by the newest commit."""
         batches = self.committed_batches(stage)
         dirs = [
             os.path.join(self.root, stage, f"batch={b}")
@@ -147,20 +184,21 @@ class CheckpointStore:
         ]
         if not dirs:
             raise FileNotFoundError(f"no committed batches for stage {stage}")
-        return spark.read.option("basePath", self.root).parquet(*dirs)
+        reader = spark.read.option("basePath", self.root)
+        recorded = pq.read_schema(self._metrics_file(stage, batches[-1])).metadata or {}
+        if SCHEMA_KEY in recorded:
+            reader = reader.schema(StructType.fromJson(json.loads(recorded[SCHEMA_KEY])))
+        # else: a store committed before schemas were recorded; Spark infers
+        return reader.parquet(*dirs)
 
-    def lineage_report(self, spark: SparkSession, stage: str) -> dict:
-        m = self.metrics(spark, stage)
-        if m is None:
-            return {"stage": stage, "parts": 0, "rows": 0, "bytes": 0}
-        agg = m.agg(
-            F.countDistinct("part_id").alias("parts"),
-            F.sum("row_count").alias("rows"),
-            F.sum("bytes").alias("bytes"),
-        ).collect()[0]
+    def lineage_report(self, stage: str) -> dict:
+        """Parts, rows and bytes committed for `stage`, and its wall time:
+        the sum of each commit batch's wall_ms."""
+        m = self.metrics(stage)
         return {
             "stage": stage,
-            "parts": int(agg["parts"]),
-            "rows": int(agg["rows"]),
-            "bytes": int(agg["bytes"]),
+            "parts": int(m["part_id"].nunique()),
+            "rows": int(m["row_count"].sum()),
+            "bytes": int(m["bytes"].sum()),
+            "wall_ms": int(m.drop_duplicates("batch")["wall_ms"].sum()),
         }
