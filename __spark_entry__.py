@@ -3497,7 +3497,7 @@ _CHANGED_BYTE_IDENTICAL = frozenset({
     "warp_rms", "warp_sum", "warp_min", "warp_max", "warp_med",
     "warp_q1", "warp_q3", "warp_cubicspline",
     "warp_lanczos", "warp_cutline", "raster_srcwin", "raster_mosaic",
-    "hex_index", "pip_bucketed", "pip_salted", "knn_cells",
+    "hex_index", "pip_bucketed", "pip_salted", "knn_brute", "knn_cells",
     "ann_brute", "ann_lsh", "ann_lsh_mp", "ann_ivf",
 })
 

@@ -1,27 +1,30 @@
 """kNN: nearest pages to each query point.
 
 GDAL core has no kNN operator (nearest appears only as a gridding metric,
-/root/reference/alg/gdalgrid.cpp:879 GDALGridNearestNeighbor); the north
-star mandates "kNN queries via H3 k-ring expansion with distance
-re-ranking". Two strategies:
+GDALGridNearestNeighbor in alg/gdalgrid.cpp); the north star mandates
+"kNN queries via H3 k-ring expansion with distance re-ranking". Two
+strategies, each one Catalyst plan with no Python and no driver collect:
 
   * `knn_brute` — exact: broadcast the (small) query set, cross-join against
     pages, haversine re-rank. O(|Q| * |pages|) distance evals but all
     JVM-side; the oracle for the cell strategy.
   * `knn_cells` — the 100 TB path: queries explode to their k-ring of hex
-    cells at `res` (kernels/hexcell.k_ring), equi-join pages on cell id
-    (hash join on a pre-indexed pages column — no pages-side shuffle if
-    pages are bucketed by cell). Candidate set is the ring disk only:
-    cost O(|Q| * ring * pages_per_cell). Approximate in the standard LSH
-    sense: exact iff the true k neighbors lie within the ring radius;
-    callers size (res, k_ring) so ring_radius_m >= the k-th-neighbor
-    distance bound they need. Small query sets compute their ring disks
-    driver-side (no python-worker spin-up); large ones via pandas_udf.
+    cells at `res` as column math (the JVM twin of kernels/hexcell.k_ring),
+    equi-join pages on cell id (hash join on a pre-indexed pages column —
+    no pages-side shuffle if pages are bucketed by cell). Candidate set is
+    the ring disk only: cost O(|Q| * ring * pages_per_cell). Approximate
+    in the standard LSH sense: exact iff the true k neighbors lie within
+    the ring radius; callers size (res, k_ring) so ring_radius_m >= the
+    k-th-neighbor distance bound they need.
 
-Both re-rank through operators/topk.topk_per_group — a salted two-phase
-top-k with NO single-task-per-query sort (the earlier
-Window.partitionBy(query_id) plan funneled every candidate of a query
-into one task; at corpus scale that task sorts the whole corpus).
+Both re-rank through operators/topk.topk_per_group: row_number over
+(query_id) filtered to rank <= k, which Spark plans as a partial
+WindowGroupLimit before the shuffle and a final one after it, so no task
+sorts a query's whole candidate set. Spark adds the partial limit only
+for k <= spark.sql.optimizer.windowGroupLimitThreshold (1000 by default).
+
+NULL coordinates: a query or page with a NULL lat or lon has no
+neighbours and is no neighbour; both strategies drop it.
 
 Determinism: ties broken by (dist_m, url) so output is a pure function of
 the data — same rule every engine run and the DuckDB oracle can reproduce.
@@ -29,23 +32,21 @@ the data — same rule every engine run and the DuckDB oracle can reproduce.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.cells_sql import hex_cell
 from ..functions.geo import haversine_m
+from ..kernels import hexcell as HX
 from .topk import topk_per_group
 
 
+def _located(df: DataFrame, lat_col: str, lon_col: str) -> DataFrame:
+    return df.filter(F.col(lat_col).isNotNull() & F.col(lon_col).isNotNull())
+
+
 def _rerank(cand: DataFrame, k: int) -> DataFrame:
-    return topk_per_group(
-        cand,
-        ["query_id"],
-        [F.col("dist_m"), F.col("url")],
-        ["url", "dist_m"],
-        k,
-    ).select("query_id", "url", "dist_m", "rank")
+    return topk_per_group(cand, ["query_id"], ["dist_m", "url"], ["url", "dist_m"], k)
 
 
 def knn_brute(
@@ -58,21 +59,21 @@ def knn_brute(
 ) -> DataFrame:
     """Exact kNN. queries: (query_id, qlat, qlon). Output: query_id, url,
     dist_m, rank (1..k). Broadcast-nested-loop join: no pages shuffle; the
-    re-rank is the salted two-phase top-k (|Q| * salt_parts tasks).
+    re-rank is the window top-k (each map task keeps k rows per query).
 
-    sample_bound (0..1): threshold-refinement for large |Q| x |pages| —
-    without it, every candidate row rides the top-k shuffle. A first pass
-    over a `sample_bound` fraction computes each query's sample k-th
-    distance; the k-th distance in ANY subset is >= the true k-th
-    distance, so filtering the full scan to dist <= bound provably keeps
-    all true top-k while shuffling only ~k/sample_bound rows per query.
-    (Queries with < k sampled candidates get no bound — nothing is
-    dropped.) Distance evals stay O(|Q| x N) codegen either way; the
-    SHUFFLE drops from O(|Q| x N) to O(|Q| x k / sample_bound)."""
-    p = pages.filter(F.col(lat_col).isNotNull())
+    sample_bound (0..1): threshold-refinement for large |Q| x |pages|. A
+    first pass over a `sample_bound` fraction computes each query's
+    sample k-th distance; the k-th distance in ANY subset is >= the true
+    k-th distance, so filtering the full scan to dist <= bound provably
+    keeps all true top-k. (Queries with < k sampled candidates get no
+    bound — nothing is dropped.) Distance evals stay O(|Q| x N) codegen
+    either way; the map-side sort ahead of the partial limit drops from
+    O(|Q| x N) rows to O(|Q| x k / sample_bound)."""
+    p = _located(pages, lat_col, lon_col)
+    q = _located(queries, "qlat", "qlon")
 
     def cand_of(pp):
-        return pp.crossJoin(F.broadcast(queries)).withColumn(
+        return pp.crossJoin(F.broadcast(q)).withColumn(
             "dist_m",
             haversine_m(F.col(lat_col), F.col(lon_col), F.col("qlat"), F.col("qlon")),
         )
@@ -92,44 +93,21 @@ def knn_brute(
     return _rerank(cand, k)
 
 
-def _ring_cells_df(queries: DataFrame, res: int, ring: int,
-                   driver_threshold: int = 10_000) -> DataFrame:
+def _ring_cells_df(queries: DataFrame, res: int, ring: int) -> DataFrame:
     """(query_id, qlat, qlon, cell) — one row per ring-disk cell.
 
-    Local/small query tables compute disks driver-side and return a
-    single LocalRelation (no Spark job, no Arrow worker spin-up, no
-    join); large distributed ones go through a pandas_udf explode."""
-    import numpy as np
-
-    from pyspark.sql.types import ArrayType, LongType
-
-    from ..kernels import hexcell as HX
-
-    small = queries.isLocal() or queries.limit(driver_threshold + 1).count() <= driver_threshold
-    if small:
-        rows = queries.select("query_id", "qlat", "qlon").collect()
-        qlat = np.array([r["qlat"] for r in rows] or [0.0])
-        qlon = np.array([r["qlon"] for r in rows] or [0.0])
-        disks = HX.k_ring(HX.latlon_to_cell(qlat, qlon, res), ring)
-        flat = [
-            (int(r["query_id"]), float(r["qlat"]), float(r["qlon"]), int(c))
-            for r, disk in zip(rows, disks)
-            for c in disk
-        ]
-        from ..session import local_df
-
-        return local_df(queries.sparkSession,
-            flat, "query_id int, qlat double, qlon double, cell long"
-        )
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def ring_cells(qlat: pd.Series, qlon: pd.Series) -> pd.Series:
-        cells = HX.latlon_to_cell(qlat.to_numpy(), qlon.to_numpy(), res)
-        disk = HX.k_ring(cells, ring)
-        return pd.Series(list(disk.tolist()))
-
-    return queries.withColumn(
-        "cell", F.explode(ring_cells(F.col("qlat"), F.col("qlon")))
+    Pure column math: a staged projection computes the query's cell
+    (barrier=False, as pip_join_bucketed stages before its explode), then
+    the disk is `cell + (dq << 28) + dr` per ring offset — the cell id
+    packs q and r additively. NULL coordinates have no cell and no row.
+    The disk is one SQL string: a Column expression per offset costs
+    three py4j round trips (0.1 s of driver time at ring 3)."""
+    disk = ", ".join(f"_c + {(int(dq) << 28) + int(dr)}" for dq, dr in HX.ring_offsets(ring))
+    return (
+        _located(queries, "qlat", "qlon")
+        .select("query_id", "qlat", "qlon",
+                hex_cell(F.col("qlat"), F.col("qlon"), res, barrier=False).alias("_c"))
+        .select("query_id", "qlat", "qlon", F.expr(f"explode(array({disk})) AS cell"))
     )
 
 
@@ -166,7 +144,7 @@ def knn_cells(
     indexed: bool = False,
 ) -> DataFrame:
     """H3-style k-ring kNN (north-star strategy): queries x ring-disk
-    cells ⋈ pages indexed by cell, then salted two-phase top-k.
+    cells ⋈ pages indexed by cell, then the window top-k.
     `indexed=True` means pages already carry the `cell` column from
     index_pages_by_cell(res) — res MUST match the index resolution."""
     q = _ring_cells_df(queries, res, ring)

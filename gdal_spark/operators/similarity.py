@@ -21,7 +21,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from .topk import topk_per_group
 
@@ -29,16 +28,12 @@ SIGN_BITS = 8
 
 
 def _rerank_cos(cand: DataFrame, k: int) -> DataFrame:
-    """Salted two-phase top-k by cosine desc (no single-task-per-query
-    sort; see operators/topk.py). Ties break by vec_id on both engines."""
+    """Window top-k by cosine desc (partial limit before the shuffle,
+    final after it; see operators/topk.py). Ties break by vec_id on both
+    engines."""
     return topk_per_group(
-        cand.withColumn("_negcos", -F.col("cos")),
-        ["query_id"],
-        [F.col("_negcos"), F.col("vec_id")],
-        ["vec_id"],
-        k,
-        salt_col=F.pmod(F.col("vec_id"), F.lit(64)),
-    ).select("query_id", "vec_id", F.col("rank").cast("int").alias("rank"))
+        cand, ["query_id"], [-F.col("cos"), "vec_id"], ["vec_id"], k
+    )
 
 
 def _cos_expr(a: str, b: str, dim: int | None = None) -> str:

@@ -1,31 +1,31 @@
-"""Distributed per-group top-k without a single-task-per-group sort.
+"""Distributed per-group top-k as one Catalyst window plan.
 
-The naive `Window.partitionBy(group).orderBy(order)` + row_number plan
-shuffles EVERY candidate of a group into one task which then sorts the
-whole group — for kNN/ANN re-ranks the group is a query id and the task
-ends up sorting the query's entire candidate set (the whole corpus for a
-brute-force scan). This module replaces it with the standard two-phase
-reduction:
+`row_number()` over `Window.partitionBy(group).orderBy(order..., payload...)`
+filtered to `rank <= k`. Catalyst's InferWindowGroupLimit rewrites that
+filter into a `WindowGroupLimit`, which the planner splits in two:
 
-  stage 1 — salted partial top-k: candidates hash into `salt_parts`
-  sub-keys per group; each (group, salt) cell keeps only its k best via
-  array_sort(collect_list(struct(order..., payload...)))[1..k]. The
-  shuffle spreads each group over salt_parts tasks and no task ever
-  holds more than its cell's candidates.
+  Partial — before the shuffle, each map task keeps at most k rows per
+  group (a per-group heap over its locally sorted rows), so the
+  exchange carries O(map tasks * k) rows per group, never a group's
+  whole candidate set;
 
-  stage 2 — final merge: at most salt_parts * k pre-sorted rows per
-  group flow into a tiny agg that sorts and slices again.
+  Final — after the hash shuffle on the group, the same limit over the
+  merged partial winners, then the Window assigns the ranks.
 
-Everything is JVM-side (collect_list/array_sort/slice are codegen'd
-aggregates); ranks come from posexplode. Order columns must be placed
-first in the struct (array_sort on structs compares fields left to
-right, ascending) — callers negate columns for descending order.
+Spark inserts the partial limit only for
+`k <= spark.sql.optimizer.windowGroupLimitThreshold` (1000 by default);
+above it the plan is a plain window sort with no map-side reduction.
+
+Ordering: ascending on the order columns (negate a column for
+descending), then on the payload columns, so exact ties still resolve
+to one deterministic ranking. Everything runs JVM-side.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 
 def topk_per_group(
@@ -34,37 +34,17 @@ def topk_per_group(
     order_cols: list[Column | str],
     payload_cols: list[str],
     k: int,
-    salt_col: Column | None = None,
-    salt_parts: int = 64,
 ) -> DataFrame:
     """Return top-k rows per group: group_cols + payload_cols + rank.
 
-    order_cols: ascending sort keys (negate for descending). salt_col
-    defaults to a hash of the first payload column.
+    order_cols: ascending sort keys (negate for descending). Payload
+    columns that order_cols names as strings are not sorted on twice.
     """
-    o_named = [
-        (c if isinstance(c, Column) else F.col(c)).alias(f"_o{i}")
-        for i, c in enumerate(order_cols)
-    ]
-    pay = [F.col(p).alias(p) for p in payload_cols]
-    if salt_col is None:
-        salt_col = F.pmod(F.xxhash64(payload_cols[0]), F.lit(salt_parts))
-    s = cand.select(
-        *group_cols,
-        salt_col.alias("_salt"),
-        F.struct(*o_named, *pay).alias("_o"),
-    )
-    part = s.groupBy(*group_cols, "_salt").agg(
-        F.slice(F.array_sort(F.collect_list("_o")), 1, k).alias("_top")
-    )
-    fin = part.groupBy(*group_cols).agg(
-        F.slice(F.array_sort(F.flatten(F.collect_list("_top"))), 1, k).alias("_top")
-    )
-    out = fin.select(
-        *group_cols, F.posexplode("_top").alias("_pos", "_o")
-    )
-    return out.select(
-        *group_cols,
-        *[F.col(f"_o.{p}").alias(p) for p in payload_cols],
-        (F.col("_pos") + 1).cast("int").alias("rank"),
+    named = {c for c in order_cols if isinstance(c, str)}
+    ties = [p for p in payload_cols if p not in named]
+    w = Window.partitionBy(*group_cols).orderBy(*order_cols, *ties)
+    return (
+        cand.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(*group_cols, *payload_cols, "rank")
     )

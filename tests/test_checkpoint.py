@@ -1,7 +1,6 @@
 """Kill-resume checkpointing: per-partition lineage, no recompute."""
 
 import os
-import time
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -50,27 +49,6 @@ def _strip_recorded_schema(store, stage):
         pq.write_table(t.replace_schema_metadata(meta), f)
 
 
-def _jobs_in_group(spark, group, fn):
-    """Spark job ids started by `fn()` under job group `group`. A sentinel
-    job in a second group is awaited first: the status store applies
-    listener events in order, so once the sentinel shows, every job `fn`
-    started shows too."""
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    try:
-        sc.setJobGroup(group, group)
-        fn()
-        sc.setJobGroup(group + "-sentinel", "sentinel")
-        spark.range(1).count()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    deadline = time.time() + 30
-    while not tracker.getJobIdsForGroup(group + "-sentinel"):
-        assert time.time() < deadline, "sentinel job never reached the status store"
-        time.sleep(0.05)
-    return list(tracker.getJobIdsForGroup(group))
-
-
 def test_kill_then_resume_no_recompute(spark, sf_dir, store):
     pages = pages_from_documents(spark, sf_dir, keep_internal=True)
     zones = zones_df(spark)
@@ -112,7 +90,7 @@ def test_kill_then_resume_no_recompute(spark, sf_dir, store):
     assert store.committed_batches("pip") == batches_before
 
 
-def test_noop_resume_starts_no_spark_job(spark, sf_dir, store):
+def test_noop_resume_starts_no_spark_job(spark, sf_dir, store, jobs_in_group):
     pages = pages_from_documents(spark, sf_dir, keep_internal=True)
     zones = zones_df(spark)
 
@@ -121,8 +99,8 @@ def test_noop_resume_starts_no_spark_job(spark, sf_dir, store):
                                lineage_key="url", n_parts=4, n_batches=2)
 
     # the fresh run must show up, or an empty job list proves nothing
-    assert _jobs_in_group(spark, "ckpt-fresh", run)
-    assert _jobs_in_group(spark, "ckpt-noop", run) == []
+    assert jobs_in_group("ckpt-fresh", run)
+    assert jobs_in_group("ckpt-noop", run) == []
 
 
 def test_metrics_file_format_and_row_counts(spark, sf_dir, store):

@@ -4,6 +4,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from gdal_spark.kernels import hexcell as HX
 from gdal_spark.kernels import mercator as M
 from gdal_spark.operators import knn as KNN
 from gdal_spark.operators import tiles as TI
@@ -93,6 +94,51 @@ def test_knn_brute_sample_bound_exact(spark, pages):
     bounded = KNN.knn_brute(pages, queries, 5, sample_bound=0.3).collect()
     key = lambda rows: {(r["query_id"], r["rank"]): r["url"] for r in rows}
     assert key(plain) == key(bounded)
+
+
+def test_knn_null_coordinates(spark):
+    """A query with a NULL qlat or qlon gets no rows from either strategy,
+    and a page with a NULL coordinate is never a neighbour."""
+    pages = spark.createDataFrame(
+        [("a", 40.7223, -74.0270), ("b", 40.7230, -74.0280), ("c", 40.7300, -74.0300),
+         ("null-lon", 40.7223, None), ("null-lat", None, -74.0271), ("null-both", None, None)],
+        "url string, lat double, lon double",
+    )
+    queries = spark.createDataFrame(
+        [(0, 40.7223, -74.0271), (1, None, -74.0271), (2, 40.7223, None), (3, None, None)],
+        "query_id int, qlat double, qlon double",
+    )
+    for out in (KNN.knn_brute(pages, queries, 5), KNN.knn_cells(pages, queries, 5, res=7, ring=1)):
+        got = sorted((r["query_id"], r["url"], r["rank"]) for r in out.collect())
+        assert got == [(0, "a", 1), (0, "b", 2), (0, "c", 3)]
+
+
+@pytest.mark.parametrize("res", [7, 9])
+def test_ring_disk_matches_kernel(spark, res):
+    """The JVM ring disk (column math in knn._ring_cells_df) equals the
+    numpy k_ring of the numpy cell, at fixed-seed points plus latitudes
+    past the mercator clip (+/-85.05112878) and longitudes at +/-180.
+    Codegen fallback is off, so a generated method past the JVM's 64 KB
+    limit in the staged projection raises instead of running interpreted."""
+    rng = np.random.default_rng(20261017)
+    lat = np.concatenate([rng.uniform(-90, 90, 200), [85.06, -85.06, 89.999, -90.0, 90.0, 0.0, 47.5]])
+    lon = np.concatenate([rng.uniform(-180, 180, 200), [180.0, -180.0, 0.0, 180.0, -180.0, 180.0, -180.0]])
+    queries = spark.createDataFrame(
+        list(zip(range(len(lat)), lat.tolist(), lon.tolist())), "query_id int, qlat double, qlon double"
+    )
+    prev = spark.conf.get("spark.sql.codegen.fallback")
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try:
+        for ring in range(4):
+            got = {}
+            for r in KNN._ring_cells_df(queries, res, ring).collect():
+                got.setdefault(r["query_id"], []).append(r["cell"])
+            want = HX.k_ring(HX.latlon_to_cell(lat, lon, res), ring)
+            assert {i: sorted(c) for i, c in got.items()} == {
+                i: sorted(d.tolist()) for i, d in enumerate(want)
+            }, ring
+    finally:
+        spark.conf.set("spark.sql.codegen.fallback", prev)
 
 
 def test_pip_strategies_agree(spark, pages):

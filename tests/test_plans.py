@@ -234,3 +234,32 @@ def test_stratified_sample_window_group_limit(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     plan = plan_of(TS.stratified_sample(docs, n_per_key=5))
     assert plan.count("WindowGroupLimit") == 2, plan
+
+
+def test_knn_is_one_catalyst_plan(spark, sf_dir, jobs_in_group):
+    """kNN builds without a driver collect (zero Spark jobs over a
+    persisted, local queries table), its ring disks are JVM column math
+    (no Python eval node), and every kNN/ANN re-rank is a window top-k:
+    a partial WindowGroupLimit before the query_id shuffle, a final one
+    after it."""
+    from gdal_spark.operators import knn as KNN
+    from gdal_spark.operators import similarity as SIM
+
+    pages = pages_from_documents(spark, sf_dir, keep_internal=True)
+    queries = spark.createDataFrame(
+        [(0, 40.7223, -74.0271), (1, 51.4783, -0.1061)], "query_id int, qlat double, qlon double"
+    ).persist()
+    queries.count()
+    built = []
+    assert jobs_in_group(
+        "knn-build", lambda: built.append(KNN.knn_cells(pages, queries, 4, res=7, ring=3))
+    ) == []
+    cells = plan_of(built[0])
+    assert "ArrowEvalPython" not in cells and "BatchEvalPython" not in cells, cells
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    for plan in (cells, plan_of(KNN.knn_brute(pages, queries, 4)),
+                 plan_of(SIM.ann_brute(emb, SIM.queries_subset(emb), 5))):
+        assert plan.count("WindowGroupLimit") == 2, plan
+    # the action must show up, or an empty job list proves nothing
+    assert jobs_in_group("knn-run", built[0].count)
+    queries.unpersist()
